@@ -148,7 +148,8 @@ def split_final_queries(
     """Split per-query timings into (final-line dict, penultimate-line
     dict): slowest ids go to the final line (2-decimal, packed greedily
     until the full final line would exceed ``_FINAL_LINE_BUDGET`` bytes),
-    the rest to the penultimate. Pure so the byte-budget test can pin it."""
+    the rest to the penultimate, fastest first so that a truncated tail
+    keeps its slowest ids. Pure so the byte-budget test can pin it."""
     probe = dict(summary)
     by_cost = sorted(timings, key=lambda q: (-timings[q], q))
     part2: dict[str, float] = {}
@@ -161,7 +162,7 @@ def split_final_queries(
             break
         part2 = cand
     part1 = {
-        q: round(timings[q], 2) for q in by_cost if q not in part2
+        q: round(timings[q], 2) for q in reversed(by_cost) if q not in part2
     }
     return part2, part1
 

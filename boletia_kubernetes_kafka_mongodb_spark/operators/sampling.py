@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import tables
+from .. import cache, tables
 
 TRAIN_PCT = 80      # bucket < 80        → train
 VAL_PCT = 10        # 80 ≤ bucket < 90   → val; rest → test
@@ -169,23 +169,17 @@ def ensure_components_layout(spark: SparkSession, sf_dir: str) -> str:
     ensure-pattern as `similarity.ensure_ivf_layout`: `_SUCCESS` marks a
     complete build; a regenerated `documents` table changes the content
     key and invalidates the layout."""
-    import os
-    import tempfile
-
-    from ..sources.layouts import dataset_cache_key
-
     from . import dedup
 
-    key = dataset_cache_key(sf_dir, "documents")
-    path = os.path.join(tempfile.gettempdir(), f"boletia_components_v1_{key}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            dedup.ext_dedup_clusters(spark, sf_dir)
-            .select("doc_id", "component")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-    return path
+    return cache.artifact(
+        "components_v1",
+        sf_dir,
+        "documents",
+        lambda path: dedup.ext_dedup_clusters(spark, sf_dir)
+        .select("doc_id", "component")
+        .write.mode("overwrite")
+        .parquet(path),
+    )
 
 
 def ext_split_leakage_safe_oracle() -> str:
@@ -871,9 +865,6 @@ def ext_split_drift_oracle() -> str:
 BLOOM_M = 1 << 16   # filter bits
 BLOOM_K = 3         # hash functions
 
-# (tag, applicationId, sf_dir, content signature) → packed 1024-long mask
-_BLOOM_MASK_CACHE: dict = {}
-
 
 def _bloom_pos(col, j: int) -> F.Column:
     """Bit position j of a shingle: 32-bit md5 slice of a seeded rendering,
@@ -953,16 +944,8 @@ def ext_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the packed filter is cached per (application, dataset signature) —
     # it IS the precomputed artifact bloom decontamination exists to ship
     # (the eval set is small and fixed; a deployment builds the filter at
-    # eval-set ingest, the `_band_index_path` discipline)
-    from ..sources.layouts import dataset_cache_get
-
-    try:
-        mask = dataset_cache_get(
-            _BLOOM_MASK_CACHE, spark, sf_dir, "documents", _build_mask,
-            tag="bloom-mask",
-        )
-    except FileNotFoundError:  # mocked tables.load fixture — build uncached
-        mask = _build_mask()
+    # eval-set ingest, the band-index artifact discipline)
+    mask = cache.memo(spark, "bloom-mask", _build_mask, sf_dir, tables=("documents",))
     mask_lit = F.lit(mask)
 
     def _bit_set(j: int) -> F.Column:

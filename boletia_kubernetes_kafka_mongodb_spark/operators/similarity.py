@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import tables
+from .. import cache, tables
 
 TOPK = 10
 QUERY_VEC_ID = 0
@@ -55,9 +55,6 @@ def _with_norm(emb: DataFrame) -> DataFrame:
     )
 
 
-_QUERY_VEC_CACHE: dict = {}
-
-
 def query_vector(spark: SparkSession, sf_dir: str):
     """The fixed probe vector (vec_id = QUERY_VEC_ID) as a numpy array,
     fetched once per (application, dataset signature) — every ANN serve
@@ -66,8 +63,6 @@ def query_vector(spark: SparkSession, sf_dir: str):
     dataset doesn't."""
     import numpy as np
 
-    from ..sources.layouts import dataset_cache_get
-
     def _fetch():
         emb = tables.load(spark, sf_dir, "embeddings")
         return np.asarray(
@@ -75,7 +70,7 @@ def query_vector(spark: SparkSession, sf_dir: str):
             dtype=np.float64,
         )
 
-    return dataset_cache_get(_QUERY_VEC_CACHE, spark, sf_dir, "embeddings", _fetch)
+    return cache.memo(spark, "query-vector", _fetch, sf_dir, tables=("embeddings",))
 
 
 def ext_topk_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -290,31 +285,19 @@ def ext_ann_lsh_topk_oracle() -> str:
     """
 
 
-def _srp_layout_path(sf_dir: str) -> str:
-    import os
-    import tempfile
-
-    from ..sources.layouts import dataset_cache_key
-
-    key = dataset_cache_key(sf_dir, "embeddings")
-    # LAYOUT_FMT version in the path: a quantizer/banding CODE change must
-    # invalidate on-disk layouts built by older code (the dataset key alone
-    # only tracks DATA changes)
-    return os.path.join(tempfile.gettempdir(), f"boletia_srp_layout_v2_{key}")
-
-
 def ensure_srp_layout(spark: SparkSession, sf_dir: str) -> str:
     """Write the SRP band-bucket layout for ``sf_dir`` if absent (checked
     via parquet's ``_SUCCESS``), and return its path — the one-time
     indexing cost; every probe afterwards is an 8-partition pruned scan."""
-    import os
-
     from ..sources import layouts
 
-    path = _srp_layout_path(sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        layouts.write_srp_band_layout(spark, sf_dir, path)
-    return path
+    # v2 in the name: a quantizer/banding CODE change must invalidate
+    # on-disk layouts built by older code (the content signature alone
+    # only tracks DATA changes)
+    return cache.artifact(
+        "srp_layout_v2", sf_dir, "embeddings",
+        lambda path: layouts.write_srp_band_layout(spark, sf_dir, path),
+    )
 
 
 def ann_lsh_topk_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -897,33 +880,19 @@ def ext_ann_ndcg_audit_oracle() -> str:
     """
 
 
-def _ivf_layout_path(sf_dir: str) -> str:
-    import os
-    import tempfile
-
-    from ..sources.layouts import dataset_cache_key
-
-    # content-signature key: a regenerated embeddings table invalidates the
-    # layout (path-only keys serve stale indexes silently)
-    key = dataset_cache_key(sf_dir, "embeddings")
-    # v2: assignment rounds similarities to 6dp before argmax (cross-engine
-    # determinism) — older layouts used unrounded argmax
-    return os.path.join(tempfile.gettempdir(), f"boletia_ivf_layout_v2_{key}")
-
-
 def ensure_ivf_layout(spark: SparkSession, sf_dir: str) -> str:
     """Write the IVF-partitioned embedding layout for ``sf_dir`` if it isn't
     already on disk (checked via parquet's ``_SUCCESS`` marker), and return
     its path. The write is the one-time indexing cost every vector index
     pays; every subsequent probe is a pruned scan."""
-    import os
-
     from ..sources import layouts
 
-    path = _ivf_layout_path(sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        layouts.write_ivf_layout(spark, sf_dir, path)
-    return path
+    # v2: assignment rounds similarities to 6dp before argmax (cross-engine
+    # determinism) — older layouts used unrounded argmax
+    return cache.artifact(
+        "ivf_layout_v2", sf_dir, "embeddings",
+        lambda path: layouts.write_ivf_layout(spark, sf_dir, path),
+    )
 
 
 def ann_ivf_topk_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -978,8 +947,6 @@ def ann_ivf_topk_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IVF index refresh under corpus growth (round 10)
 # ---------------------------------------------------------------------------
 
-_IVF_STANDING_QUANT_CACHE: dict = {}
-
 
 def _ivf_standing_quantizer(spark: SparkSession, sf_dir: str):
     """The FROZEN coarse quantizer of the standing index: centroids are the
@@ -998,7 +965,6 @@ def _ivf_standing_quantizer(spark: SparkSession, sf_dir: str):
     import numpy as np
 
     from .sampling import split_assignment
-    from ..sources.layouts import dataset_cache_get
 
     def _build():
         emb = tables.load(spark, sf_dir, "embeddings")
@@ -1028,20 +994,9 @@ def _ivf_standing_quantizer(spark: SparkSession, sf_dir: str):
 
         return assign, C, c_norm
 
-    return dataset_cache_get(
-        _IVF_STANDING_QUANT_CACHE, spark, sf_dir, "embeddings", _build,
-        tag="standing",
+    return cache.memo(
+        spark, "ivf-standing-quantizer", _build, sf_dir, tables=("embeddings",)
     )
-
-
-def _ivf_refresh_path(sf_dir: str) -> str:
-    import os
-    import tempfile
-
-    from ..sources.layouts import dataset_cache_key
-
-    key = dataset_cache_key(sf_dir, "embeddings")
-    return os.path.join(tempfile.gettempdir(), f"boletia_ivf_refresh_v1_{key}")
 
 
 def ensure_refreshed_ivf_layout(spark: SparkSession, sf_dir: str) -> str:
@@ -1069,37 +1024,35 @@ def ensure_refreshed_ivf_layout(spark: SparkSession, sf_dir: str) -> str:
     from .sampling import split_assignment
     from ..sources import layouts
 
-    path = _ivf_refresh_path(sf_dir)
-    marker = os.path.join(path, "_REFRESHED")
-    if os.path.exists(marker):
-        return path
-    assign, _, _ = _ivf_standing_quantizer(spark, sf_dir)
-    emb = tables.load(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull()
+    def write(path: str) -> None:
+        assign, _, _ = _ivf_standing_quantizer(spark, sf_dir)
+        emb = tables.load(spark, sf_dir, "embeddings").where(
+            F.col("embedding").isNotNull()
+        )
+        # build: static overwrite clears any partial prior attempt
+        (
+            emb.where(split_assignment("vec_id") != "test")
+            .withColumn("ivf_list", assign("embedding"))
+            .write.mode("overwrite")
+            .partitionBy("ivf_list")
+            .parquet(path)
+        )
+        # refresh: frozen-quantizer assignment of the arriving batch, appended
+        (
+            emb.where(split_assignment("vec_id") == "test")
+            .withColumn("ivf_list", assign("embedding"))
+            .write.mode("append")
+            .partitionBy("ivf_list")
+            .parquet(path)
+        )
+        layouts.compact_layout(spark, path)
+        cache.forget(path)
+        with open(os.path.join(path, "_REFRESHED"), "w") as f:
+            f.write("build+append+compact complete\n")
+
+    return cache.artifact(
+        "ivf_refresh_v1", sf_dir, "embeddings", write, marker="_REFRESHED"
     )
-    layouts._invalidate_layout(path)
-    # build: static overwrite clears any partial prior attempt
-    (
-        emb.where(split_assignment("vec_id") != "test")
-        .withColumn("ivf_list", assign("embedding"))
-        .write.mode("overwrite")
-        .partitionBy("ivf_list")
-        .parquet(path)
-    )
-    # refresh: frozen-quantizer assignment of the arriving batch, appended
-    (
-        emb.where(split_assignment("vec_id") == "test")
-        .withColumn("ivf_list", assign("embedding"))
-        .write.mode("append")
-        .partitionBy("ivf_list")
-        .parquet(path)
-    )
-    layouts._invalidate_layout(path)
-    layouts.compact_layout(spark, path)
-    layouts._invalidate_layout(path)
-    with open(marker, "w") as f:
-        f.write("build+append+compact complete\n")
-    return path
 
 
 def ext_ann_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1212,8 +1165,6 @@ def ann_topk_over_refreshed(spark: SparkSession, sf_dir: str) -> DataFrame:
 PROMOTE_K = 5        # recall@k of the audit
 PROMOTE_NQ = 4       # probe queries (lowest non-null vec_ids)
 PROMOTE_MIN_HITS = 10  # promote iff hits >= this, i.e. recall >= 0.5 of K*NQ
-
-_PROMOTE_CACHE: dict = {}
 
 
 def _promote_new_quantizer(spark: SparkSession, sf_dir: str):
@@ -1378,7 +1329,6 @@ def ext_ann_index_promote(spark: SparkSession, sf_dir: str) -> DataFrame:
     honest price of measuring recall, run on a sampled query set in
     production); everything committed moves through the pointer-file
     protocol (crash-atomic, power-loss-durable after round 11/12)."""
-    from ..sources.layouts import dataset_cache_get
 
     def build():
         import shutil
@@ -1454,9 +1404,7 @@ def ext_ann_index_promote(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             shutil.rmtree(work, ignore_errors=True)
 
-    rows = dataset_cache_get(
-        _PROMOTE_CACHE, spark, sf_dir, "embeddings", build, tag="ann_promote"
-    )
+    rows = cache.memo(spark, "ann-promote", build, sf_dir, tables=("embeddings",))
     return spark.createDataFrame(
         rows,
         "candidate string, audited_hits long, audited_recall double, "
@@ -1920,17 +1868,9 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str):
     Cached per (application, sf_dir) like `_kmeans_fit`: the codebooks are
     the index's model artifact — trained once when the index is built,
     served by every query."""
-    import numpy as np
-
-    from ..sources.layouts import dataset_cache_get
-
-    return dataset_cache_get(
-        _KMEANS_FIT_CACHE,
-        spark,
-        sf_dir,
-        "embeddings",
-        lambda: _pq_codebooks_build(spark, sf_dir),
-        tag="pq",
+    return cache.memo(
+        spark, "pq-codebooks", lambda: _pq_codebooks_build(spark, sf_dir),
+        sf_dir, tables=("embeddings",),
     )
 
 
@@ -2393,9 +2333,6 @@ def _kmeans_partials():
     return partials
 
 
-_KMEANS_FIT_CACHE: dict = {}
-
-
 def _kmeans_fit(spark: SparkSession, sf_dir: str):
     """Run KMEANS_ITERS Lloyd iterations; return (base frame, centroids).
 
@@ -2411,15 +2348,9 @@ def _kmeans_fit(spark: SparkSession, sf_dir: str):
     would measure training three times and serving once. First call pays
     the full fit.
     """
-    from ..sources.layouts import dataset_cache_get
-
-    return dataset_cache_get(
-        _KMEANS_FIT_CACHE,
-        spark,
-        sf_dir,
-        "embeddings",
-        lambda: _kmeans_fit_build(spark, sf_dir),
-        tag="fit",
+    return cache.memo(
+        spark, "kmeans-fit", lambda: _kmeans_fit_build(spark, sf_dir),
+        sf_dir, tables=("embeddings",),
     )
 
 

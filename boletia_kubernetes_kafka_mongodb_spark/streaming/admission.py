@@ -485,25 +485,3 @@ def admission_drain_frames(
         for k in range(n_batches)
     ]
 
-
-def admission_ledger_stream_tws(requests: DataFrame) -> DataFrame:
-    """Same admission fold on the ``transformWithStateInPandas`` API — the
-    GA arbitrary-state processor of Spark 4.x (typed state handles, timers,
-    TTL, state schema evolution), which is where
-    ``applyInPandasWithState`` workloads are headed.
-
-    Semantics are identical to :func:`admission_ledger_stream` (one
-    ``ValueState[available:long]`` per evento, rows folded in seq order
-    within each micro-batch); the equivalence test asserts ledger equality
-    with the batch fold. RUNTIME REQUIREMENT: TWS's python↔JVM state
-    protocol needs ``google.protobuf``; environments without it (this
-    container) keep using the classic API — the test auto-skips.
-    """
-    from ..operators._pandas_udfs import make_admission_stateful_processor
-
-    return requests.groupBy("evento").transformWithStateInPandas(
-        statefulProcessor=make_admission_stateful_processor(STATE_SCHEMA),
-        outputStructType=LEDGER_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )

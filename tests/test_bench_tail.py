@@ -11,7 +11,8 @@ real byte counts over the real 149-id registry:
 2. the final line produced by ``split_final_queries`` stays inside
    ``_FINAL_LINE_BUDGET`` for worst-case value widths;
 3. the two parts partition the id set exactly (nothing dropped, nothing
-   doubled) and the final line carries the SLOWEST ids.
+   doubled), the final line carries the SLOWEST ids, and the penultimate
+   line runs fastest-first.
 """
 
 from __future__ import annotations
@@ -81,6 +82,10 @@ def test_parts_partition_ids_and_slowest_go_final():
         assert min(timings[q] for q in part2) >= max(
             timings[q] for q in part1
         )
+        # the penultimate line runs fastest-first, so a tail cut keeps
+        # its slowest ids
+        order = [timings[q] for q in part1]
+        assert order == sorted(order)
 
 
 def test_small_runs_fit_one_line():

@@ -157,10 +157,8 @@ def test_tiled_kernels_match_bruteforce_on_random_corpora(spark):
     against a pure-python brute force — covers corpus shapes the fixture
     doesn't have: empty docs, single-token docs, exact duplicates, docs
     colliding into the same block, multiple langs with identical texts.
-
-    NOTE: sf_dir must be unique per generated corpus — ``_token_hash_sets``
-    caches per (application, sf_dir), so reusing a key would silently serve
-    the previous corpus.
+    SimHash rides along: with no dataset on disk to key its caches on, it
+    must build uncached rather than raise.
     """
     import random
     import re as _re
@@ -208,8 +206,31 @@ def test_tiled_kernels_match_bruteforce_on_random_corpora(spark):
                 (r.doc_a, r.doc_b)
                 for r in D.ext_dedup_containment(spark, f"rand-{seed}").collect()
             }
+            got_s = {
+                (r.doc_a, r.doc_b)
+                for r in D.ext_dedup_simhash(spark, f"rand-{seed}").collect()
+            }
         assert got_j == want_j, f"seed {seed}: jaccard {got_j ^ want_j}"
         assert got_c == want_c, f"seed {seed}: containment {got_c ^ want_c}"
+
+        # simhash brute force over the same signatures: same lang, hamming
+        # within the bound, and at least one 16-bit band in common
+        sigs = sorted(
+            (r.doc_id, r.lang, r.simhash)
+            for r in D.simhash_signatures(docs).collect()
+        )
+        want_s = {
+            (a, b)
+            for i, (a, la, sa) in enumerate(sigs)
+            for b, lb, sb in sigs[i + 1:]
+            if la == lb
+            and bin((sa ^ sb) & (2**64 - 1)).count("1") <= D.SIMHASH_MAX_HAMMING
+            and any(
+                (sa >> (16 * k)) & 0xFFFF == (sb >> (16 * k)) & 0xFFFF
+                for k in range(D.SIMHASH_BANDS)
+            )
+        }
+        assert got_s == want_s, f"seed {seed}: simhash {got_s ^ want_s}"
 
 
 def test_containment_catches_subsumed_doc(spark):
